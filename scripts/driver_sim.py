@@ -125,7 +125,9 @@ def main() -> int:
     qs, oracles = mod.queries(), mod.oracle_sql()
     fails = []
     n_run = 0
-    for name in sorted(qs):
+    # dict order, as the driver iterates: a partial run covers the
+    # driver window (the first 50 keys) first
+    for name in qs:
         if (only and name not in only) or name in SKIP:
             continue
         n_run += 1

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlengine_spark.registry import all_oracles, all_queries
+from sqlengine_spark.registry import all_queries, get_oracle, get_query
 from sqlengine_spark.session import DEFAULT_SF_DIR, TABLES, get_spark, load_tables, table
 
 
@@ -146,12 +146,12 @@ class SQLEngine:
 
     def run(self, qid: str) -> DataFrame:
         """Run a library operator against this engine's data directory."""
-        return all_queries()[qid](self.spark, self.sf_dir)
+        return get_query(qid)(self.spark, self.sf_dir)
 
     def oracle(self, qid: str) -> str | None:
         """The ANSI-SQL equivalent of a library operator (None for
         rows-only operators)."""
-        return all_oracles().get(qid)
+        return get_oracle(qid)
 
     def explain(self, target) -> str:
         """Formatted physical plan for a library operator id or any

@@ -1888,7 +1888,8 @@ def l_topic_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair space is VOCABULARY-bounded, not corpus-bounded —
     the per-doc positional fan-out emits C(|distinct tokens per doc|,
     2) pairs which partial-aggregate map-side into at most C(|V|, 2)
-    groups; df and N broadcast. At web scale the vocabulary is first
+    groups; df joins plain (AQE broadcasts it when small), only the
+    1-row N is broadcast. At web scale the vocabulary is first
     capped to the top-V tokens by df (one ranked filter before the
     fan-out) — same plan, bounded V; pairs never cross documents.
 
@@ -1910,7 +1911,8 @@ def l_topic_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges are vocabulary-bounded.
     """
     d = table(spark, sf_dir, "documents")
-    arr_d = d.select(
+    # the oracle's a.doc_id = b.doc_id pairs no NULL-doc_id row
+    arr_d = d.filter(F.col("doc_id").isNotNull()).select(
         F.array_sort(F.array_distinct(F.split("text", " "))).alias("arr")
     )
     lhs = arr_d.select(
@@ -1930,9 +1932,15 @@ def l_topic_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_ab") >= 25)
     )
     tok = _tokens(d)
+    # the oracle's SELECT DISTINCT doc_id, t folds every NULL-doc_id row
+    # into ONE document: count the keyed docs, plus 1 if any NULL one
     df_tab = (
         tok.groupBy("t")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(
+            (
+                F.count("doc_id") + F.max(F.col("doc_id").isNull().cast("int"))
+            ).alias("n_docs")
+        )
         .localCheckpoint()  # vocab-bounded, two consumers (pin 17a)
     )
     n_total = d.filter(F.col("text").isNotNull()).agg(

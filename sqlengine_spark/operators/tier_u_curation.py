@@ -335,14 +335,15 @@ def l_dup_ngram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.concat_ws(" ", F.slice("w", F.col("i"), 8)).alias("g")
     )
     gc = g.groupBy("source", "g").agg(F.count("*").alias("occ"))
-    per_src = gc.groupBy("source").agg(
+    per_src = gc.groupBy(F.col("source").alias("src")).agg(
         F.sum("occ").alias("total_8grams"),
         F.count("*").alias("distinct_8grams"),
     )
     docs = base.groupBy("source").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
-    return docs.join(per_src, "source").select(
+    # null-safe: the oracle's GROUP BY source keeps a NULL-source group
+    return docs.join(per_src, F.col("source").eqNullSafe(F.col("src"))).select(
         "source",
         "n_docs",
         "total_8grams",

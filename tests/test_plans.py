@@ -784,8 +784,8 @@ def test_hybrid_search_broadcast_and_topk(spark):
 
 
 def test_topic_cooccur_doc_keyed_not_allpairs(spark):
-    # pair generation must join on doc_id (inverted index), with df and
-    # N broadcast — no token-table cartesian
+    # pairs fan out per document (never across documents), the 1-row N
+    # is broadcast — no token-table cartesian
     plan = _plan(spark, "l_topic_cooccur")
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan

@@ -656,21 +656,26 @@ def test_dsir_weight_matches_oracle_on_random_corpora(spark, data):
 
 
 def _roundtrip_documents(spark, rows, qid):
-    """Write generated documents rows, run queries()[qid] on them, run
-    the registered oracle on the same parquet, return (got, want)."""
+    """Write generated documents rows (or a documents-shaped DataFrame),
+    run queries()[qid] on them, run the registered oracle on the same
+    parquet, return (got, want)."""
     import os
     import shutil
     import tempfile
 
+    from pyspark.sql import DataFrame
+
     from sqlengine_spark.registry import all_oracles, all_queries
 
-    base = tempfile.mkdtemp(prefix=f"sqlengine_{qid}_prop_")
-    try:
-        spark.createDataFrame(
+    if not isinstance(rows, DataFrame):
+        rows = spark.createDataFrame(
             rows,
             schema="doc_id long, text string, lang string, "
             "source string, n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
+        )
+    base = tempfile.mkdtemp(prefix=f"sqlengine_{qid}_prop_")
+    try:
+        rows.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(base, "documents.parquet")
         )
         result = all_queries()[qid](spark, base)
@@ -1424,3 +1429,38 @@ def test_bpe_train_matches_oracle_on_random_corpora(spark, data):
         assert got == want
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# NULL grouping/join keys the fixtures lack (CLAUDE.md rule 1b: fixtures
+# drift): each test derives a documents table from sf0.001 with NULLs in
+# one key column and requires the unchanged oracle's answer.
+# ---------------------------------------------------------------------------
+
+
+def _documents_with_nulls(spark, **null_when):
+    """sf0.001 documents with ``col`` set NULL where ``null_when[col]``
+    (a SQL predicate) holds."""
+    d = table(spark, SF_DIR_SMALL, "documents")
+    return d.select(
+        *[
+            F.when(F.expr(null_when[c]), None).otherwise(F.col(c)).alias(c)
+            if c in null_when
+            else F.col(c)
+            for c in d.columns
+        ]
+    )
+
+
+def test_dup_ngram_rate_keeps_null_source_group(spark):
+    docs = _documents_with_nulls(spark, source="doc_id % 4 = 0")
+    got, (cols, rows) = _roundtrip_documents(spark, docs, "l_dup_ngram_rate")
+    assert any(r[cols.index("source")] is None for r in rows)
+    assert got == (cols, rows)
+
+
+def test_topic_cooccur_pairs_skip_null_doc_ids(spark):
+    docs = _documents_with_nulls(spark, doc_id="doc_id % 3 = 0")
+    got, (cols, rows) = _roundtrip_documents(spark, docs, "l_topic_cooccur")
+    assert rows
+    assert got == (cols, rows)
